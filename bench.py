@@ -67,18 +67,6 @@ HEADLINE_EXT = [
     #   5-rep record is the stricter trend instrument)
 ]
 
-# CPU-scaling sentinel (VERDICT r12 item 2): every 12-key HEADLINE
-# entry is sub-1.2 s at sf0.1 — scheduling/barrier-bound, so the
-# driver's 32-vs-8-core comparison over `queries` reads ≈1.0 for all
-# of them and the honored $SPARK_GRAFT_CPUS contract looks broken
-# ("suspect_cpus_ignored"). dedup_embedding_cosine is genuinely
-# CPU-bound (measured 12.17 s @ 8 cores vs 5.58 s @ 32, BENCH_r12_c8),
-# so timing it on the full headline discipline and reporting it INSIDE
-# "queries" — while keeping "value" the sum of the original 12 keys so
-# the headline total stays r1-comparable — makes the scaling contract
-# legible in the surface the driver actually compares.
-SCALING_SENTINEL = ["dedup_embedding_cosine"]
-
 # Heaviest non-headline families, tracked so a regression is visible
 # BEFORE a round touches them. Kept out of HEADLINE/"value" so the
 # headline total stays directly comparable across rounds (BENCH_r01
@@ -117,13 +105,7 @@ SECONDARY = [
     "dedup_incremental_rolling",   # two-day admit-and-grow index loop
     "stream_dedup_rolling",        # the same loop as streaming foreachBatch
     "sim_ivf_incremental",         # frozen-centroid vector-index append
-    # r12 optimization round addition dedup_embedding_cosine (tracked
-    # from birth after the probe-side repartition fix, 29.7 s -> 5.6 s,
-    # OPTIMIZATION_r12.md) moved to SCALING_SENTINEL (r13): it is now
-    # timed on the full headline discipline and reported inside
-    # "queries" (still excluded from "value") so the driver's CPU
-    # scaling comparison sees it — double-timing it here too would
-    # repeat the corpus_curate_incremental mistake r11 fixed.
+    "dedup_embedding_cosine",      # exact tiled all-pairs cosine kernel
 ]
 
 
@@ -249,7 +231,6 @@ def main() -> None:
     # triple as a regression).
     probe_start = _host_probe(spark)
     timings = time_keys(HEADLINE, warmups=2, reps=5)
-    scaling_sentinel = time_keys(SCALING_SENTINEL, warmups=2, reps=5)
     ext_runs: dict[str, list[float]] = {}
     headline_ext = time_keys(HEADLINE_EXT, warmups=2, reps=5, raw=ext_runs)
     secondary_runs: dict[str, list[float]] = {}
@@ -349,7 +330,7 @@ def main() -> None:
     probe_mean = round((probe_start["sec"] + probe_end["sec"]) / 2, 3)
     normalized = {
         k: round(v / probe_mean, 3)
-        for block in (timings, scaling_sentinel, headline_ext, secondary)
+        for block in (timings, headline_ext, secondary)
         for k, v in block.items()}
 
     detail = {
@@ -377,12 +358,6 @@ def main() -> None:
             "serving cost by design. headline_ext (r11): three "
             "rotated-in keys on the FULL headline discipline, kept out "
             "of value so the 12-key total stays r1-comparable. "
-            "queries additionally carries dedup_embedding_cosine (r13): "
-            "the CPU-bound scaling sentinel, full headline discipline, "
-            "EXCLUDED from value — value stays the sum of the original "
-            "12 HEADLINE keys; the sentinel exists so the driver's "
-            "32-vs-8-core ratio over queries has one key that actually "
-            "scales with cores. "
             "host_probe: fixed-work code-independent calibration "
             "(shuffle-join CPU triple + synced ~330MB parquet write "
             "pair) at bench start and end — read per-key ratios "
@@ -402,11 +377,8 @@ def main() -> None:
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
-        # queries = the 12 HEADLINE keys (their sum IS "value") + the
-        # CPU-bound scaling sentinel, timed on the same discipline but
-        # EXCLUDED from "value" so the total stays r1-comparable.
-        # Entries are only ever ADDED here, never removed or renamed.
-        "queries": {**timings, **scaling_sentinel},
+        # queries = the 12 HEADLINE keys; their sum IS "value"
+        "queries": timings,
         "headline_ext": headline_ext,
         "host_probe_sec": probe_start["sec"],
         "secondary": secondary,

@@ -165,9 +165,12 @@ def snapshot_diff_fused(
         return df.select(
             *pk_cols,
             # Unique per-row salt for null-PK rows so they never group
-            # together; 0 for well-keyed rows (the normal path is
-            # untouched — one constant column through the shuffle).
-            F.when(any_null, F.monotonically_increasing_id() + 1)
+            # together: positive on the prod side, negative on the
+            # backup side (each side's monotonically_increasing_id
+            # restarts, so an unsigned salt collides across sides); 0
+            # for well-keyed rows.
+            F.when(any_null, (F.monotonically_increasing_id() + 1)
+                   * F.lit(1 if is_prod else -1))
             .otherwise(F.lit(0)).alias("__nullsalt"),
             F.struct(*[F.col(c) for c in compare_cols]).alias("__vals"),
             F.struct(*[F.col(c) for c in order_cols]).alias("__ord"),

@@ -12,10 +12,12 @@ Five strategies, each a distributed query shape that survives 100 TB:
   candidates, then exact hamming verify via xor+bit_count.
 - n-gram Jaccard: inverted-index join on shingles (|A∩B| by counting
   shared shingles) — exact, no LSH approximation, heavier shuffle.
-- embedding cosine: near-dup by vector similarity within blocking keys.
+- embedding cosine: exact all-pairs scoring in tiles below 50 k vectors,
+  hyperplane-LSH blocking from there up.
 
-Everything is built-in expressions — xxhash64 / arrays / explode / joins —
-no Python in any row path.
+Everything except the embedding kernels is built-in expressions —
+xxhash64 / arrays / explode / joins; those cross into numpy only through
+Arrow-batched pandas UDFs.
 """
 
 from __future__ import annotations
@@ -743,11 +745,17 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     Iterative min-label propagation: each round every node takes the min
     of its own label and its neighbors' labels; converges in
     O(cluster diameter) rounds (near-dup clusters are shallow — a few
-    rounds in practice, ``max_iter`` caps pathological chains). Each
-    round is one join + one partial-agg'd groupBy, all JVM-side; the
-    per-round result is persisted so round N+1 doesn't recompute rounds
-    1..N. At extreme scale the same loop with large-star/small-star
-    rewrites converges in O(log n) — the shape here is the standard one.
+    rounds in practice). Each round is one join + one partial-agg'd
+    groupBy, all JVM-side; the per-round result is persisted so round
+    N+1 doesn't recompute rounds 1..N. At extreme scale the same loop
+    with large-star/small-star rewrites converges in O(log n) — the
+    shape here is the standard one.
+
+    Ids in ``src``/``dst`` must be non-NULL: a NULL id joins nothing and
+    min ignores it, so its pairs would silently drop out. Raises
+    RuntimeError when ``max_iter`` rounds end before a round leaves the
+    labels unchanged (a chain longer than ``max_iter`` - 1 hops): the
+    labels at that point are not components.
     """
     from pyspark import StorageLevel
 
@@ -795,9 +803,9 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         .select("id", F.col("id").alias("component"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # decimal(38,0): the sum of N doc_id-sized longs must not overflow
-    # under ANSI mode (2^63-scale ids x 10^10 rows ~ 10^29 << 10^38)
-    prev_sum = None
+    # a distinct sentinel, not None: an all-NULL or empty round sums to
+    # NULL, which must not read as "same as the previous round"
+    prev_sum: object = object()
     cached = comp
     for it in range(max_iter):
         nxt = (
@@ -806,6 +814,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
             .agg(F.min("component").alias("component"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        # decimal(38,0): the sum of N doc_id-sized longs must not overflow
+        # under ANSI mode (2^63-scale ids x 10^10 rows ~ 10^29 << 10^38)
         cur_sum = nxt.agg(
             F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
         cached.unpersist()
@@ -831,6 +841,12 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
             comp = comp.localCheckpoint(eager=True)
             cached.unpersist()
             cached = comp
+    else:
+        cached.unpersist()
+        sym.unpersist()
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds")
     # Unpersisting sym/comp directly here would CASCADE: Spark's
     # CacheManager also evicts every cached plan containing the
     # unpersisted plan as a subplan — i.e. the result the caller is
@@ -938,11 +954,12 @@ def _first_collision(a: str, b: str, n_tables: int) -> Column:
 def _lsh_params(frame: DataFrame, n_planes: int | None,
                 n_tables: int | None,
                 corpus_n: int | None) -> tuple[int, int, int | None]:
-    """One defaulting ladder for BOTH blocking callers
-    (embedding_near_dup and embedding_incremental_near_dup must block
-    identically or the shared recall pin stops covering the incremental
-    path): count once if needed, planes from _lsh_block_planes, tables
-    16 in the fixture regime / 8 at scale. Also returns the resolved
+    """One defaulting ladder for BOTH blocking callers (_lsh_near_dup and
+    embedding_incremental_near_dup): the recall pin in tests runs
+    _lsh_near_dup at fixture sizes and covers the incremental path only
+    because both resolve the same planes/tables here. Counts once if
+    needed; planes from _lsh_block_planes, tables 16 in the fixture
+    regime / 8 at scale. Also returns the resolved
     corpus count (None only when both params were passed explicitly
     AND no count was supplied) so callers can size the probe-side
     partitioning from it (:func:`_probe_partitions`)."""
@@ -980,49 +997,224 @@ def _probe_partitions(frame: DataFrame, n_planes: int, n_tables: int,
     return int(min(4096, max(dp, est // 200_000)))
 
 
+#: Corpus size from which embedding_near_dup blocks by hyperplane LSH.
+#: Below it the exact tiled scan beats the 4-plane/16-table blocking
+#: _lsh_params picks there (10 k vectors: 2.2 s vs 395 s); from it up
+#: the log2(N)-plane blocking is faster (50 k: 10-11 s vs 7-10 s; 100 k:
+#: 32-44 s vs 12-16 s). Probe table: SCALE.md.
+_EXACT_MAX_N = 50_000
+#: Vectors per tile of the exact scan. Every vector is copied to ⌈N/B⌉
+#: tile pairs, so the shuffle ships N²/B rows: at 50 k vectors B = 1024 /
+#: 2048 / 4096 / 8192 / 16384 measured 85 / 27-35 / 13-23 / 10-11 / 11 s.
+#: 8192 keeps ⌈N/B⌉(⌈N/B⌉+1)/2 = 28 tasks there. Task memory does not
+#: grow with B beyond the tile pair's own rows: scores are computed in
+#: _SCORE_CELLS blocks and emitted in _RESCORE_CHUNK pieces.
+_EXACT_TILE = 8192
+#: Cosine prefilter cells per BLAS call (32 MB of float64).
+_SCORE_CELLS = 1 << 22
+#: Surviving pairs re-scored and emitted per piece (a (pairs, dim)
+#: product array of 32 MB at dim 64).
+_RESCORE_CHUNK = 1 << 16
+
+
+def _exact_tile_scores(embeddings: DataFrame, threshold: float, dim: int,
+                       corpus_n: int) -> DataFrame:
+    """(vec_a, vec_b, dot, nrm_a, nrm_b) for every pair whose cosine can
+    round to >= threshold, over ALL pairs — no blocking.
+
+    Each vector lands in one of T = ⌈N/B⌉ tiles by xxhash64(vec_id) and
+    is copied to the T tile pairs (min(t, u), max(t, u)) it belongs to;
+    each tile pair is one applyInPandas group, so every pair of rows is
+    scored in exactly one group. A group prefilters with BLAS products
+    of the row-normalized tiles at threshold - 1e-6 (BLAS sums in its
+    own order, ulps away from the engine's sums, far inside the margin),
+    then re-scores the survivors with the engine's arithmetic: float32
+    products cast to double (exact) summed in vector._balanced's
+    pairing — the same double V.dot's codegen tree yields. The norms are
+    Spark's own V.norm, so the caller's dot / (nrm_a * nrm_b) is
+    bit-identical to the join path's cosine.
+
+    NaN prefilter scores (zero or NaN vectors) are kept, so the division
+    and its NULL/error semantics stay Spark's. Rows with a NULL id or a
+    NULL norm (NULL array or element) are dropped up front: the join
+    path never pairs or verifies them either. ``corpus_n`` sizes the
+    tiles; no rows are collected into the calling process."""
+    from typing import Any, Iterator, Tuple
+
+    import numpy as np
+    import pandas as pd
+
+    from database_syncer_spark.pipeline import vector as V
+
+    n_tiles = max(1, -(-corpus_n // _EXACT_TILE))
+    cut = threshold - 1e-6
+
+    def score(key, batches):
+        lo, hi = key
+        pdf = pd.concat(list(batches), ignore_index=True)
+        tile = pdf["tile"].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
+        nrm = pdf["nrm"].to_numpy()
+        x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        a, b = np.flatnonzero(tile == lo), np.flatnonzero(tile == hi)
+        if not len(b):
+            return
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xn = x / nrm[:, None]
+        xb = xn[b].T
+        step = max(1, _SCORE_CELLS // len(b))
+        for k in range(0, len(a), step):
+            rows = a[k:k + step]
+            keep = ~(xn[rows] @ xb < cut)
+            if lo == hi:
+                keep &= ids[rows, None] < ids[b]
+            i, j = np.nonzero(keep)
+            ia, ib = rows[i], b[j]
+            # a tile pair's rows are ordered by tile, not id: orient each
+            # pair as vec_a < vec_b (equal ids share a tile, never cross)
+            swap = ids[ia] > ids[ib]
+            ia, ib = np.where(swap, ib, ia), np.where(swap, ia, ib)
+            for m in range(0, len(ia), _RESCORE_CHUNK):
+                ca = ia[m:m + _RESCORE_CHUNK]
+                cb = ib[m:m + _RESCORE_CHUNK]
+                yield pd.DataFrame({
+                    "vec_a": ids[ca], "vec_b": ids[cb],
+                    "dot": V._balanced(list((x[ca] * x[cb]).T), np.add),
+                    "nrm_a": nrm[ca], "nrm_b": nrm[cb]})
+
+    # applyInPandas picks its iterator form from real type hints; this
+    # module's annotations are strings, so set them explicitly
+    score.__annotations__ = {"key": Tuple[Any, ...],
+                             "batches": Iterator[pd.DataFrame],
+                             "return": Iterator[pd.DataFrame]}
+
+    tile = F.pmod(F.xxhash64("vec_id"), F.lit(n_tiles))
+    other = F.explode(F.sequence(F.lit(0), F.lit(n_tiles - 1)))
+    copies = (
+        embeddings
+        # the first dim elements: all V.dot / V.norm read of a longer array
+        .select("vec_id", F.slice("embedding", 1, dim).alias("embedding"),
+                V.norm("embedding", dim).alias("nrm"))
+        .where(F.col("vec_id").isNotNull() & F.col("nrm").isNotNull())
+        .select("*", tile.alias("tile"))
+        .select("*", other.alias("u"))
+        .select(F.least("tile", "u").alias("lo"),
+                F.greatest("tile", "u").alias("hi"),
+                "tile", "vec_id", "embedding", "nrm"))
+    # explicit count: one partition per tile pair survives AQE coalescing
+    # (the groupBy reuses this exchange)
+    return (copies.repartition(n_tiles * (n_tiles + 1) // 2, "lo", "hi")
+            .groupBy("lo", "hi")
+            .applyInPandas(score, "vec_a long, vec_b long, dot double, "
+                                  "nrm_a double, nrm_b double"))
+
+
+def _lsh_near_dup(embeddings: DataFrame, threshold: float, dim: int,
+                  n_planes: int | None = None, n_tables: int | None = None,
+                  corpus_n: int | None = None) -> DataFrame:
+    """embedding_near_dup's rows over the candidate pairs (vec_a < vec_b)
+    that share a hyperplane-LSH bucket in at least one band."""
+    n_planes, n_tables, corpus_n = _lsh_params(
+        embeddings, n_planes, n_tables, corpus_n)
+    # All n_tables band buckets in ONE Arrow-batched mapInPandas pass.
+    # The unrolled-expression alternatives both fail here: explode(
+    # array(struct(<16 band kernels>))) inlines 4096 product terms
+    # into one generate_doConsume and blows Janino's 64 KB method
+    # limit (the r6 sim_lsh_ann defect), and a 16-branch select+union
+    # serializes a ~4k-term interpreted tree into EVERY task binary —
+    # measured OOM at task DESERIALIZATION (ObjectInputStream handle
+    # table) with 8 concurrent tasks on a 1 GiB heap, on a 500-row
+    # fixture. A 64×64 sign-projection is one numpy GEMV per batch:
+    # the serialized plan is KBs (planes travel as a closure
+    # constant), the executor work is vectorized, and the per-row
+    # dot uses a fixed-axis pairwise sum so a row's sign bits are
+    # independent of batch boundaries (partition-count-independent
+    # buckets — the same determinism rule the ANN model state pins).
+    # Each pair is emitted ONLY from its first colliding band
+    # (_first_collision) instead of DISTINCT over the per-band join
+    # output — the join rows carry each side's full bucket vector
+    # (n_tables longs) so the dedup is a codegen'd filter, not a
+    # candidate-volume-sized exchange.
+    # Explicit-count repartition on the join key: user-specified
+    # counts survive AQE coalescing, so the pair expansion + verify
+    # run at collision-volume-sized parallelism instead of the
+    # scan's split count (guide §2.5; measured 29.7 s -> see
+    # OPTIMIZATION_r12.md). Keyed on (tbl, bucket) so a shuffle
+    # join at scale reuses this exchange outright.
+    skinny = _lsh_band_rows(
+        _lsh_bucket_vectors(embeddings, n_planes, n_tables, dim)
+    ).repartition(
+        _probe_partitions(embeddings, n_planes, n_tables, corpus_n),
+        "tbl", "bucket")
+    a, b = skinny.alias("a"), skinny.alias("b")
+    pairs = (
+        a.join(b, ["tbl", "bucket"])
+        .where((F.col("a.vec_id") < F.col("b.vec_id"))
+               & _first_collision("a", "b", n_tables))
+        .select(F.col("a.vec_id").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b")))
+    return _cosine_rows(_verify_pairs(pairs, embeddings, dim), threshold)
+
+
+def _verify_pairs(pairs: DataFrame, embeddings: DataFrame,
+                  dim: int) -> DataFrame:
+    """Candidate pairs joined to both embeddings: (vec_a, vec_b, dot,
+    nrm_a, nrm_b) from the codegen'd V.dot/V.norm kernels."""
+    from database_syncer_spark.pipeline import vector as V
+
+    e = embeddings.select(
+        "vec_id", "embedding", V.norm("embedding", dim).alias("nrm"))
+    return (
+        pairs
+        .join(e.alias("ea"), F.col("vec_a") == F.col("ea.vec_id"))
+        .join(e.alias("eb"), F.col("vec_b") == F.col("eb.vec_id"))
+        .select("vec_a", "vec_b",
+                V.dot("ea.embedding", "eb.embedding", dim).alias("dot"),
+                F.col("ea.nrm").alias("nrm_a"),
+                F.col("eb.nrm").alias("nrm_b")))
+
+
+def _cosine_rows(scored: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cosine) rows with round(cosine, 6) >= threshold."""
+    cos = F.col("dot") / (F.col("nrm_a") * F.col("nrm_b"))
+    return (scored.select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
+            .where(F.col("cosine") >= threshold))
+
+
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
                        dim: int = 64, n_planes: int | None = None,
                        n_tables: int | None = None,
                        corpus_n: int | None = None,
                        block_col: str | None = None) -> DataFrame:
-    """Vector near-dup pairs (round-6dp cosine >= threshold), blocked by
-    random-hyperplane LSH buckets (similarity.py's deterministic md5
-    planes) instead of a data column: candidate volume tracks the true
-    near-dup pair count plus an N²/2**n_planes-per-band noise term, not
-    the quadratic within-block blowup a label/category block gives
-    (measured 2.5x rows -> 4.6x wall, ~9 h extrapolated at 1 M vectors —
-    the r6 SCALE.md finding this rewrite kills).
+    """Vector near-dup pairs (vec_a < vec_b, round-6dp cosine >=
+    threshold) over the whole corpus.
 
-    RECALL REGIME: below 50 k vectors the 4-plane/16-table policy makes
-    recall TOTAL at τ=0.5 on the fixtures (pinned by
-    tests/test_pipeline.py::test_embedding_lsh_blocking_recall_total);
-    at >=50 k vectors _lsh_params switches to log2(N) planes / 8 tables,
-    which keeps the noise term ~N per band but concentrates recall on
+    Below ``_EXACT_MAX_N`` vectors (``corpus_n``, counted once when not
+    passed) every pair is scored by the exact tiled kernel
+    (:func:`_exact_tile_scores`): the result is the exhaustive pair scan
+    by construction, so an exhaustive-scan oracle is complete there
+    without any recall argument.
+
+    At and above it, candidates come from random-hyperplane LSH buckets
+    (similarity.py's deterministic md5 planes, :func:`_lsh_near_dup`) with
+    log2(N) planes / 8 tables (``n_planes``/``n_tables`` override them):
+    candidate volume tracks the true near-dup pair count plus an
+    ~N-per-band noise term instead of N², and recall concentrates on
     the high-similarity regime real dedup thresholds live in (cosine
     0.99 pairs: >=0.99 at 1 M; cosine ~0.5 pairs: effectively 0 — the
-    inherent LSH trade; callers needing mid-similarity recall at scale
-    must raise n_tables or use the exact ``block_col`` variant).
+    inherent LSH trade; on the SCALE.md probe at 50 k vectors it kept
+    1,171 of the 14,956 pairs >= 0.5). Candidates are verified by
+    re-fetching both embeddings and the codegen'd exact cosine.
 
-    Band join rows carry (vec_id, buckets[n_tables], tbl, bucket) —
-    (2+n_tables)×8 bytes, embedding-free — so the self-join ships no
-    payload; the full bucket vector rides along because dedup across
-    bands is the _first_collision FILTER, not a pair distinct.
-    Embeddings are re-fetched candidate-sized for the exact cosine
-    verify. ``block_col`` keeps the exact within-column variant (the old
-    default) for oracle/exactness use.
+    ``block_col`` pairs only rows sharing that column's value (the exact
+    within-block Spark scan; a constant column is the all-pairs
+    reference the tests compare against).
 
     .. versionchanged:: r7
        Defaults changed semantics: ``threshold`` 0.9 -> 0.5 and
-       ``block_col`` ``"label"`` -> ``None`` (hyperplane-LSH blocking
-       instead of exact label blocks). Callers relying on the old exact
-       label-blocked behavior must now pass ``block_col="label",
-       threshold=0.9`` explicitly — with LSH blocking the emitted pair
-       set is recall-total only in the regimes documented above."""
-    from database_syncer_spark.pipeline import vector as V
-
-    e = embeddings.select(
-        "vec_id", "embedding", V.norm("embedding", dim).alias("nrm"))
-
+       ``block_col`` ``"label"`` -> ``None``. Callers relying on the old
+       exact label-blocked behavior must pass ``block_col="label",
+       threshold=0.9`` explicitly."""
     if block_col is not None:
         blocked = embeddings.select(
             "vec_id", F.col(block_col).alias("block"))
@@ -1032,56 +1224,15 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.5,
             .where(F.col("a.vec_id") < F.col("b.vec_id"))
             .select(F.col("a.vec_id").alias("vec_a"),
                     F.col("b.vec_id").alias("vec_b")))
-    else:
-        n_planes, n_tables, corpus_n = _lsh_params(
-            embeddings, n_planes, n_tables, corpus_n)
-        # All n_tables band buckets in ONE Arrow-batched mapInPandas pass.
-        # The unrolled-expression alternatives both fail here: explode(
-        # array(struct(<16 band kernels>))) inlines 4096 product terms
-        # into one generate_doConsume and blows Janino's 64 KB method
-        # limit (the r6 sim_lsh_ann defect), and a 16-branch select+union
-        # serializes a ~4k-term interpreted tree into EVERY task binary —
-        # measured OOM at task DESERIALIZATION (ObjectInputStream handle
-        # table) with 8 concurrent tasks on a 1 GiB heap, on a 500-row
-        # fixture. A 64×64 sign-projection is one numpy GEMV per batch:
-        # the serialized plan is KBs (planes travel as a closure
-        # constant), the executor work is vectorized, and the per-row
-        # dot uses a fixed-axis pairwise sum so a row's sign bits are
-        # independent of batch boundaries (partition-count-independent
-        # buckets — the same determinism rule the ANN model state pins).
-        # Each pair is emitted ONLY from its first colliding band
-        # (_first_collision) instead of DISTINCT over the per-band join
-        # output — the join rows carry each side's full bucket vector
-        # (n_tables longs) so the dedup is a codegen'd filter, not a
-        # candidate-volume-sized exchange.
-        # Explicit-count repartition on the join key: user-specified
-        # counts survive AQE coalescing, so the pair expansion + verify
-        # run at collision-volume-sized parallelism instead of the
-        # scan's split count (guide §2.5; measured 29.7 s -> see
-        # OPTIMIZATION_r12.md). Keyed on (tbl, bucket) so a shuffle
-        # join at scale reuses this exchange outright.
-        skinny = _lsh_band_rows(
-            _lsh_bucket_vectors(embeddings, n_planes, n_tables, dim)
-        ).repartition(
-            _probe_partitions(embeddings, n_planes, n_tables, corpus_n),
-            "tbl", "bucket")
-        a, b = skinny.alias("a"), skinny.alias("b")
-        pairs = (
-            a.join(b, ["tbl", "bucket"])
-            .where((F.col("a.vec_id") < F.col("b.vec_id"))
-                   & _first_collision("a", "b", n_tables))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b")))
-
-    dot = V.dot("ea.embedding", "eb.embedding", dim)
-    cos = dot / (F.col("ea.nrm") * F.col("eb.nrm"))
-    return (
-        pairs
-        .join(e.alias("ea"), F.col("vec_a") == F.col("ea.vec_id"))
-        .join(e.alias("eb"), F.col("vec_b") == F.col("eb.vec_id"))
-        .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+        return _cosine_rows(_verify_pairs(pairs, embeddings, dim), threshold)
+    if corpus_n is None:
+        corpus_n = embeddings.count()
+    if corpus_n < _EXACT_MAX_N:
+        return _cosine_rows(
+            _exact_tile_scores(embeddings, threshold, dim, corpus_n),
+            threshold)
+    return _lsh_near_dup(embeddings, threshold, dim, n_planes, n_tables,
+                         corpus_n)
 
 
 def embedding_incremental_near_dup(batch: DataFrame, corpus: DataFrame,

@@ -249,8 +249,8 @@ def dedup_corpus_keep(spark, sf_dir):
 def dedup_embedding_incremental(spark, sf_dir):
     """Ingest-time embedding near-dup (r7 stretch): the vec_id % 16 == 5
     slice plays the daily batch, the rest the existing corpus — the
-    vector-modality analog of dedup_incremental, riding the same
-    bucketed blocks as dedup_embedding_cosine. Exhaustive batch×corpus
+    vector-modality analog of dedup_incremental, blocked by
+    hyperplane-LSH bands (dedup._lsh_params). Exhaustive batch×corpus
     oracle; complete because the fixture-regime blocking's recall at
     τ=0.5 is verified total (tests/test_pipeline.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -820,13 +820,12 @@ def dedup_soft_keep(spark, sf_dir):
 
 
 def dedup_embedding_cosine(spark, sf_dir):
-    """Near-dup pairs over the whole corpus, candidate-blocked by
-    hyperplane-LSH buckets (r7: replaces the label block whose
-    within-block scan measured quadratic — ~9 h extrapolated at 1 M
-    vectors). Oracle is the EXHAUSTIVE pair scan: at the fixture sizes
-    the 4-plane/16-table blocking's recall at τ=0.5 is verified total
-    (tests/test_pipeline.py pins it on all three fixture SFs), the same
-    honesty argument dedup_minhash_lsh's exact oracle rides."""
+    """Near-dup pairs over the whole corpus at τ=0.5. Below
+    embedding_near_dup's crossover (every fixture size) each pair is
+    scored by the exact tiled kernel; from it up, candidates are
+    hyperplane-LSH blocked. Oracle is the EXHAUSTIVE pair scan, which
+    the exact path equals by construction (tests/test_pipeline.py pins
+    it against the Spark all-pairs scan and the numpy mirror)."""
     emb = load_table(spark, sf_dir, "embeddings")
     dim, n = _emb_dim_n(sf_dir, emb)
     return D.embedding_near_dup(emb, threshold=0.5, dim=dim, corpus_n=n)
@@ -2207,11 +2206,9 @@ SELECT a.doc_id, a.component, s.cluster_size,
          < CAST(1000000 // s.cluster_size AS BIGINT) AS kept
 FROM allc a JOIN sizes s USING (component)
 """,
-    # EXHAUSTIVE pair scan (no blocking): complete ground truth for the
-    # LSH-bucket-blocked Spark plan — recall of the fixture-regime
-    # 4-plane/16-table blocking is verified total at τ=0.5 on all three
-    # fixture SFs (tests/test_pipeline.py), so equality here proves the
-    # blocking loses nothing, the same argument dedup_minhash_lsh makes.
+    # EXHAUSTIVE pair scan (no blocking): at fixture sizes the Spark
+    # plan is the exact tiled all-pairs kernel, so this is its ground
+    # truth with no recall argument needed.
     "dedup_embedding_cosine": """
 WITH e AS (
   SELECT vec_id, embedding,

@@ -60,7 +60,7 @@ KEYS = [
     ("dedup_soft_keep",
      "banded-LSH pairs -> iterative components -> component-keyed size agg; weighting is stage-local integer math"),
     ("dedup_embedding_cosine",
-     "hyperplane-LSH bucket blocking (r7): one numpy mapInPandas bucketing pass, per-band self-join over posexploded bucket vectors, first-collision filter instead of pair DISTINCT (no candidate-sized exchange), exact-cosine verify candidate-sized"),
+     "exact tiled all-pairs kernel below 50 k vectors: rows copied to their tile pairs, ONE exchange into a grouped numpy applyInPandas (BLAS prefilter + engine-arithmetic re-score), no candidate self-join and no embedding re-fetch joins; hyperplane-LSH blocking from 50 k up"),
     ("dedup_embedding_incremental",
      "batch x corpus band join on the shared bucket vectors — no corpus self-join; verdict aggregates over exact-verified pairs only (r7)"),
     ("dedup_paragraph",
@@ -110,6 +110,7 @@ def main() -> None:
         plan = re.sub(r"#\d+L?", "#x", plan)
         plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
         plan = re.sub(r"\[id=#x\]", "", plan)
+        plan = re.sub(r"@[0-9a-f]{6,}\b", "@x", plan)  # literal object ids
         lines = plan.rstrip().splitlines()
         if len(lines) > 400:
             # Iterative keys (connected components) unroll their loop

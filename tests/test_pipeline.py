@@ -707,6 +707,21 @@ def test_connected_components_deep_chains_converge(spark):
             assert got[head + pos] == head
 
 
+def test_connected_components_unconverged_raises(spark):
+    """A path longer than max_iter rounds can propagate must raise, not
+    return the half-propagated labels as components."""
+    from database_syncer_spark.pipeline.dedup import connected_components
+
+    edges = spark.range(6).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(edges, max_iter=3)
+    # the same path converges once the cap covers its 6 hops
+    got = {r.doc_id: r.component
+           for r in connected_components(edges, max_iter=7).collect()}
+    assert got == {i: 0 for i in range(7)}
+
+
 def test_ngram_containment_catches_subdocument(spark, sf_dir):
     """A short doc embedded verbatim inside a much longer one:
     containment(short→long) = 1.0 while Jaccard ≈ |A|/|B| is far below
@@ -1000,32 +1015,30 @@ def test_prebuilt_index_serves_the_argument_queries(spark, sf_dir):
 
 
 def test_embedding_lsh_blocking_recall_total(spark):
-    """The r7 default blocking for embedding_near_dup is hyperplane-LSH
-    buckets (label blocking measured quadratic-within-block, ~9 h
-    extrapolated at 1 M vectors). Its EXHAUSTIVE-scan oracle is only
-    honest if the fixture-regime blocking (4 planes / 16 tables) has
-    total recall at the registered τ=0.5 — pin that on both driver
-    fixtures AND the bench fixture. The exhaustive truth is the same
-    function with a constant block (one block == all pairs)."""
+    """The fixture-regime hyperplane-LSH blocking (4 planes / 16 tables,
+    still used by embedding_incremental_near_dup, whose exhaustive
+    oracle rests on it) must have total recall at the registered τ=0.5
+    on the sf0.001, sf0.01 and sf0.1 fixtures. Calls the LSH path
+    directly: embedding_near_dup scores these sizes exactly."""
     from conftest import sf_path
-    from database_syncer_spark.pipeline.dedup import embedding_near_dup
+    from database_syncer_spark.pipeline.dedup import (
+        _lsh_near_dup, _lsh_params, embedding_near_dup)
 
     # sf0.001 legitimately has ZERO pairs at τ=0.5 (exhaustive-verified);
     # the driver fixture and the bench fixture must be non-vacuous or the
-    # recall pin proves nothing there. At sf0.1 the exhaustive truth
-    # comes from the engine-exact Spark-free numpy mirror (the Spark
-    # all-pairs unrolled-dot join there cost ~30 s of suite wall, r7
-    # advice); the mirror itself is cross-checked against the Spark
-    # exhaustive scan at the two small SFs below.
+    # recall pin proves nothing there. The exhaustive truth is the
+    # engine-exact Spark-free numpy mirror, cross-checked against the
+    # Spark exhaustive scan (a constant block) at the two small SFs.
     from ann_reference import exhaustive_cosine_pairs, load_embeddings
 
     min_pairs = {"sf0.001": 0, "sf0.01": 1, "sf0.1": 1}
     for name in ["sf0.001", "sf0.01", "sf0.1"]:
         emb = load_table(spark, sf_path(name), "embeddings") \
             .withColumn("allblk", F.lit(1))
+        n = emb.count()
+        assert _lsh_params(emb, None, None, n)[:2] == (4, 16), name
         lsh = {(r.vec_a, r.vec_b, r.cosine)
-               for r in embedding_near_dup(
-                   emb, threshold=0.5, corpus_n=emb.count()).collect()}
+               for r in _lsh_near_dup(emb, 0.5, 64, corpus_n=n).collect()}
         exhaustive = exhaustive_cosine_pairs(
             *load_embeddings(sf_path(name)), threshold=0.5)
         if name != "sf0.1":  # keep the mirror honest where Spark is cheap
@@ -1034,9 +1047,64 @@ def test_embedding_lsh_blocking_recall_total(spark):
                                     emb, threshold=0.5,
                                     block_col="allblk").collect()}
             assert exhaustive == spark_exhaustive, name
-        assert lsh <= exhaustive, name  # cosine verify: no false positives
-        assert lsh == exhaustive, (name, exhaustive - lsh)
+        assert lsh == exhaustive, (name, exhaustive - lsh, lsh - exhaustive)
         assert len(exhaustive) >= min_pairs[name], name
+
+
+def test_embedding_exact_path_is_the_all_pairs_scan(spark):
+    """Below the crossover embedding_near_dup scores every pair with the
+    tiled numpy kernel. At τ=-1 (every pair passes) its rows must equal
+    the Spark all-pairs scan — same pairs, bit-identical rounded cosines
+    — so the kernel drops no pair and re-scores with the engine's own
+    arithmetic."""
+    from conftest import sf_path
+    from database_syncer_spark.pipeline.dedup import (
+        _EXACT_MAX_N, embedding_near_dup)
+
+    emb = load_table(spark, sf_path("sf0.01"), "embeddings") \
+        .withColumn("allblk", F.lit(1))
+    n = emb.count()
+    assert n < _EXACT_MAX_N
+    exact = embedding_near_dup(emb, threshold=-1.0, corpus_n=n).collect()
+    scan = embedding_near_dup(emb, threshold=-1.0,
+                              block_col="allblk").collect()
+    assert len(exact) == n * (n - 1) // 2
+    assert sorted(map(tuple, exact)) == sorted(map(tuple, scan))
+
+
+def test_embedding_exact_path_null_rows_match_scan(spark):
+    """NULL ids, NULL arrays and NULL elements never verify in the join
+    path; the exact kernel must drop the same rows, not pair them."""
+    from database_syncer_spark.pipeline.dedup import embedding_near_dup
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 1.0]), (2, [1.0, 0.1, 1.0]), (3, None),
+         (4, [1.0, None, 1.0]), (None, [1.0, 0.0, 1.0]),
+         (5, [-1.0, 0.0, 1.0])],
+        "vec_id long, embedding array<float>").withColumn("blk", F.lit(1))
+    exact = embedding_near_dup(emb, threshold=-1.0, dim=3).collect()
+    scan = embedding_near_dup(emb, threshold=-1.0, dim=3,
+                              block_col="blk").collect()
+    assert sorted(map(tuple, exact)) == sorted(map(tuple, scan))
+    assert {(r.vec_a, r.vec_b) for r in exact} == {(1, 2), (1, 5), (2, 5)}
+
+
+def test_embedding_exact_path_multi_tile(spark, monkeypatch):
+    """Split the sf0.1 corpus over several tiles (the constant is
+    patched small): every cross-tile and within-tile pair must be scored
+    exactly once, matching the engine-exact numpy mirror."""
+    from conftest import sf_path
+    from database_syncer_spark.pipeline import dedup as D
+    from ann_reference import exhaustive_cosine_pairs, load_embeddings
+
+    monkeypatch.setattr(D, "_EXACT_TILE", 600)  # 2000 vectors -> 4 tiles
+    emb = load_table(spark, sf_path("sf0.1"), "embeddings")
+    for threshold in (0.5, 0.2):
+        got = D.embedding_near_dup(emb, threshold=threshold).collect()
+        want = exhaustive_cosine_pairs(
+            *load_embeddings(sf_path("sf0.1")), threshold=threshold)
+        assert len(got) == len(want) > 0, threshold
+        assert set(map(tuple, got)) == want, threshold
 
 
 def test_embedding_lsh_scale_params_widen_buckets(spark, sf_dir):

@@ -138,6 +138,19 @@ def test_cosine_kernels_stay_in_codegen(spark, sf_dir):
     assert "zip_with" not in ivf and "aggregate(embedding" not in ivf
 
 
+def test_embedding_exact_path_is_one_exchange(spark, sf_dir):
+    """Below the crossover the near-dup plan is one exchange of the
+    tile-pair copies into the grouped numpy kernel: no candidate
+    self-join and no embedding re-fetch joins (the groupBy reuses the
+    explicit tile-pair repartition)."""
+    from database_syncer_spark.registry import all_queries
+
+    plan = _plan(all_queries()["dedup_embedding_cosine"](spark, sf_dir))
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "Join" not in plan, plan
+    assert len(re.findall(r"\bExchange ", plan)) == 1, plan
+
+
 def test_no_row_at_a_time_python_in_headline(spark, sf_dir):
     """Headline keys may cross into Python only through Arrow-batched
     evaluation (ArrowEvalPython / MapInPandas), never BatchEvalPython."""
@@ -168,7 +181,7 @@ def test_bench_headline_keys_exist():
 
     qs = all_queries()
     missing = [k for k in (*bench.HEADLINE, *bench.HEADLINE_EXT,
-                           *bench.SCALING_SENTINEL, *bench.SECONDARY)
+                           *bench.SECONDARY)
                if k not in qs]
     assert not missing, missing
 
